@@ -1,0 +1,7 @@
+package org.apache.spark
+
+/** Waits until every queued listener event has been delivered, so the
+  * traced run reads complete job metrics (the bus is package-private). */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
