@@ -27,9 +27,14 @@ final case class WordTopics(wordId: Int, counts: Array[Long])
   * signatures; `Rdd`-suffixed cores are what train/infer drive.
   *
   * Trade-offs, stated explicitly:
-  *  - S jobs per iteration instead of 1 (each materialized before its
-  *    shard broadcast is released). Job overhead amortizes at the corpus
-  *    sizes that force sharding in the first place.
+  *  - S sweep jobs per iteration instead of 1 (each materialized before
+  *    its shard broadcast is released), plus one model recount, which
+  *    also sums the next iteration's global row. With the likelihood on,
+  *    each shard pass also adds its words' pre-sweep likelihood terms
+  *    and the last pass sums them, so the likelihood costs no job or
+  *    broadcast of its own: S collect-and-broadcasts and 2S+1 jobs per
+  *    iteration. Job overhead amortizes at the corpus sizes that force
+  *    sharding in the first place.
   *  - Within an iteration every shard samples against counts that are
   *    stale from the iteration start (the global row n(k) too). This is
   *    the same one-iteration-staleness class as AD-LDA across partitions
@@ -130,49 +135,77 @@ object ShardedLda {
     flat
   }
 
+  /** One doc between the shard passes of an iteration. `pzd` is its
+    * iteration-start p(z|d), K doubles, carried from pass 0 to the last
+    * pass only when the likelihood is fused (null otherwise, and dropped
+    * by the last pass); `ll` sums the pre-sweep log-likelihood terms of
+    * the words swept so far. */
+  private final case class PassDoc(doc: DocState, pzd: Array[Double], ll: Double)
+
   /** One training iteration: for each shard, broadcast its rows + the
     * iteration-start global row, sweep only that shard's occurrences.
-    * Returns the swept corpus (persisted, materialized). */
+    * Returns the swept corpus (a view over the persisted, materialized
+    * last pass). */
   def sweepIteration(
       docs: Dataset[DocState], modelRows: Dataset[WordTopics],
       numWords: Int, numTopics: Int, numShards: Int,
       alpha: Double, beta: Double, seed: Long, iter: Int): Dataset[DocState] = {
     import docs.sparkSession.implicits._
-    docs.sparkSession.createDataset(
-      sweepIterationRdd(docs.rdd, modelRows.rdd.map(r => (r.wordId, r.counts)),
-        numWords, numTopics, numShards, alpha, beta, seed, iter,
-        checkpointLast = false))
+    val rows = modelRows.rdd.map(r => (r.wordId, r.counts))
+    val (swept, _) = sweepIterationRdd(docs.rdd, rows, globalRowRdd(rows, numTopics),
+      numWords, numTopics, numShards, alpha, beta, seed, iter,
+      withLikelihood = false, checkpointLast = false)
+    docs.sparkSession.createDataset(swept.map(_.doc))
   }
 
-  /** RDD core of [[sweepIteration]]. `checkpointLast` marks the final
-    * shard pass for localCheckpoint BEFORE its materializing count (RDD
-    * checkpoint marks must precede the first job), bounding recompute
-    * depth at one iteration after block loss. */
-  def sweepIterationRdd(
-      docs: RDD[DocState], modelRows: RDD[(Int, Array[Long])],
+  /** RDD core of [[sweepIteration]]. `global0` is n(k) of `modelRows`,
+    * stale for the whole iteration. With `withLikelihood` every pass also
+    * adds the pre-sweep log-likelihood of its shard's words — read from
+    * the unmutated broadcast rows, `global0` and the p(z|d) pass 0 took —
+    * to the doc's `ll`, and the last pass's materializing action is a
+    * treeReduce of that field: the value is the corpus log-likelihood of
+    * the iteration-start state (quirk #6), exactly-once under task retry
+    * like [[Gibbs.countModelWithLL]], at no extra job or broadcast.
+    * Returns the last pass (persisted, materialized) and that sum (NaN
+    * without `withLikelihood`). `checkpointLast` marks the last pass for
+    * localCheckpoint BEFORE its materializing action (RDD checkpoint
+    * marks must precede the first job), bounding recompute depth at one
+    * iteration after block loss. */
+  private def sweepIterationRdd(
+      docs: RDD[DocState], modelRows: RDD[(Int, Array[Long])], global0: Array[Long],
       numWords: Int, numTopics: Int, numShards: Int,
       alpha: Double, beta: Double, seed: Long, iter: Int,
-      checkpointLast: Boolean): RDD[DocState] = {
+      withLikelihood: Boolean, checkpointLast: Boolean): (RDD[PassDoc], Double) = {
     val sc = docs.sparkContext
     val k = numTopics
     val vBeta = numWords * beta
-    val global0 = globalRowRdd(modelRows, k) // stale for the whole iteration
-    var current = docs
+    val bcGlobal = sc.broadcast(global0)
+    var current = docs.map(d => PassDoc(d, null, 0.0))
+    var ll = Double.NaN
     var s = 0
     val nShards = effectiveShards(numWords, numShards)
     while (s < nShards) {
       val (lo, hi) = shardBounds(numWords, numShards, s)
       val bcShard = sc.broadcast(collectShard(modelRows, lo, hi, k))
-      val bcGlobal = sc.broadcast(global0)
+      val (pass, first, last) = (s, s == 0, s == nShards - 1)
       val prev = current
       current = current.mapPartitions { it =>
-        val shard = bcShard.value.clone() // task-local AD-LDA replica
-        val global = bcGlobal.value.clone()
+        val stale = bcShard.value // unmutated — the likelihood's rows
+        val shard = stale.clone() // task-local AD-LDA replica
+        val staleGlobal = bcGlobal.value
+        val global = staleGlobal.clone()
         val dist = new Array[Double](k)
-        it.map { doc =>
+        it.map { case PassDoc(doc, pzd0, ll0) =>
           val topics = doc.topics.clone()
           val docTopics = doc.topicHistogram(k)
-          val rng = new SplitMix64(Rng.mix(seed, doc.docId, iter.toLong << 16 | s))
+          val pzd =
+            if (withLikelihood && first) topicProbs(docTopics, doc.numOccurrences, alpha)
+            else pzd0
+          val docLl =
+            if (withLikelihood)
+              shardLogLikelihood(doc, lo, hi, stale, staleGlobal, beta, vBeta, pzd, ll0)
+            else ll0
+          val rng = new SplitMix64(Rng.mix(seed, doc.docId, iter.toLong << 16 | pass))
           var i = 0
           while (i < doc.wordIds.length) {
             val w = doc.wordIds(i)
@@ -201,17 +234,21 @@ object ShardedLda {
             }
             i += 1
           }
-          DocState(doc.docId, doc.wordIds, doc.offsets, topics)
+          PassDoc(DocState(doc.docId, doc.wordIds, doc.offsets, topics),
+            if (last) null else pzd, docLl)
         }
       }.persist(StorageLevel.MEMORY_AND_DISK)
-      if (checkpointLast && s == nShards - 1) current.localCheckpoint()
-      current.count() // materialize before releasing this shard's broadcast
-      if (prev ne docs) prev.unpersist(blocking = false)
+      if (checkpointLast && last) current.localCheckpoint()
+      // materialize before releasing this shard's broadcast
+      if (withLikelihood && last)
+        ll = current.map(_.ll).treeReduce(_ + _, depth = 1) // one Double per partition
+      else current.count()
+      if (!first) prev.unpersist(blocking = false)
       bcShard.unpersist(blocking = false)
-      bcGlobal.unpersist(blocking = false)
       s += 1
     }
-    current
+    bcGlobal.unpersist(blocking = false)
+    (current, ll)
   }
 
   /** Sharded training output. CACHE-LIFETIME CONTRACT (the repo-wide
@@ -230,8 +267,9 @@ object ShardedLda {
       modelRows: Dataset[WordTopics],
       docs: Dataset[DocState],
       likelihoods: Array[Double],
-      /** wall-clock per training iteration, ms (all S shard passes +
-        * model recount) — the sharded twin of
+      /** wall-clock per training iteration, ms (all S shard passes, the
+        * likelihood fused into them, + model recount and its global
+        * row) — the sharded twin of
         * [[LdaTrainer.Result.iterMillis]], what the broadcast-vs-sharded
         * crossover measurement reads */
       iterMillis: Array[Long],
@@ -288,9 +326,12 @@ object ShardedLda {
     var docs = corpus.rdd.mapPartitions(it => it, preservesPartitioning = true)
       .persist(StorageLevel.MEMORY_AND_DISK)
     docs.localCheckpoint() // marked before the first job below
+    var pinned: RDD[_] = docs // the currently-persisted doc generation
     var modelRows = countModelRowsRdd(docs, cfg.numTopics)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    modelRows.count()
+    // the job that materializes a recount also sums its global row n(k),
+    // which every shard pass of the next iteration reads
+    var global = globalRowRdd(modelRows, cfg.numTopics)
     // ArrayBuffer, not Array.newBuilder: mid-loop snapshots for checkpoint
     // saves must not disturb the builder (see the matching note in Lda.scala)
     val lls = scala.collection.mutable.ArrayBuffer.empty[Double]
@@ -300,18 +341,20 @@ object ShardedLda {
     var iter = startIter
     while (iter < cfg.totalIterations) {
       val tIter0 = System.nanoTime()
-      if (cfg.computeLikelihood)
-        lls += shardedLikelihoodRdd(docs, modelRows, numWords, cfg, numShards)
-      val prevDocs = docs
+      val prevDocs = pinned
       val prevModel = modelRows
       // the last shard pass is localCheckpoint-marked inside: each
       // iteration's final state owns its blocks, so the S-pass chain
       // never has to replay further back than one iteration
-      docs = sweepIterationRdd(docs, modelRows, numWords, cfg.numTopics,
-        numShards, cfg.alpha, cfg.beta, cfg.seed, iter, checkpointLast = true)
+      val (swept, ll) = sweepIterationRdd(docs, modelRows, global, numWords,
+        cfg.numTopics, numShards, cfg.alpha, cfg.beta, cfg.seed, iter,
+        withLikelihood = cfg.computeLikelihood, checkpointLast = true)
+      if (cfg.computeLikelihood) lls += ll
+      docs = swept.map(_.doc) // narrow view over the persisted generation
+      pinned = swept
       modelRows = countModelRowsRdd(docs, cfg.numTopics)
         .persist(StorageLevel.MEMORY_AND_DISK)
-      modelRows.count()
+      global = globalRowRdd(modelRows, cfg.numTopics)
       prevDocs.unpersist(blocking = false)
       prevModel.unpersist(blocking = false)
       iterMs += (System.nanoTime() - tIter0) / 1000000L
@@ -323,7 +366,7 @@ object ShardedLda {
           numParts = docs.getNumPartitions,
           iterMs = iterMs.toArray, bcastMs = Array.empty)
     }
-    val (finalDocs, finalModel) = (docs, modelRows)
+    val (finalDocs, finalModel) = (pinned, modelRows)
     Result(modelRows.map { case (w, c) => WordTopics(w, c) }.toDS(),
       spark.createDataset(docs), lls.toArray, iterMs.toArray,
       release = () => {
@@ -423,7 +466,7 @@ object ShardedLda {
         }.persist(StorageLevel.MEMORY_AND_DISK)
         // cut the S-pass chain at each iteration boundary, marked before
         // the materializing count
-        if (s == numShards - 1) state.localCheckpoint()
+        if (s == nShards - 1) state.localCheckpoint()
         state.count() // materialize before releasing this shard's broadcast
         prev.unpersist(blocking = false)
         bcShard.unpersist(blocking = false)
@@ -437,12 +480,50 @@ object ShardedLda {
       state.map { case (d, acc) => LdaInfer.DocTopics(d.docId, acc.map(_ / n)) })
   }
 
-  /** Corpus log-likelihood on the sharded model: per-word log p(w|z)
-    * terms need the word's own row, so compute word-major — join model
-    * rows to per-doc word slices? Cheaper: docs carry everything except
-    * n(w,·); ship p(z|d) per doc-word via an exploded join on wordId.
-    * For bounded shards we reuse the shard-at-a-time broadcast instead:
-    * Σ over shards of the shard's occurrences' contributions. */
+  /** p(z|d) = (n(d,z)+α)/(n_d+Kα) from a doc's topic histogram — the
+    * per-doc factor of the likelihood (sampler.cc:116-166). */
+  private def topicProbs(hist: Array[Long], len: Int, alpha: Double): Array[Double] = {
+    val k = hist.length
+    val p = new Array[Double](k)
+    var t = 0
+    while (t < k) { p(t) = (hist(t) + alpha) / (len + alpha * k); t += 1 }
+    p
+  }
+
+  /** `acc` plus the log-likelihood of `doc`'s occurrences of the words in
+    * [lo, hi): Σ_w n(d,w)·log Σ_t p(w|t)·p(t|d), with
+    * p(w|t) = (n(w,t)+β)/(n(t)+Vβ) read from that shard's rows `shard` and
+    * the global row `global`. The one copy of the per-word term: the fused
+    * shard pass and the standalone [[shardedLikelihoodRdd]] both call it. */
+  private def shardLogLikelihood(
+      doc: DocState, lo: Int, hi: Int, shard: Array[Long], global: Array[Long],
+      beta: Double, vBeta: Double, pzd: Array[Double], acc: Double): Double = {
+    val k = pzd.length
+    var ll = acc
+    var i = 0
+    while (i < doc.wordIds.length) {
+      val w = doc.wordIds(i)
+      if (w >= lo && w < hi) {
+        val wOff = (w - lo) * k
+        var pw = 0.0
+        var t = 0
+        while (t < k) {
+          pw += (shard(wOff + t) + beta) / (global(t) + vBeta) * pzd(t)
+          t += 1
+        }
+        ll += (doc.offsets(i + 1) - doc.offsets(i)) * math.log(pw)
+      }
+      i += 1
+    }
+    ll
+  }
+
+  /** Corpus log-likelihood on the sharded model, standalone: the
+    * reference evaluator for the value training fuses into its shard
+    * passes (which makes no call here). Per-word log p(w|z) terms need
+    * the word's own row, so it reuses the shard-at-a-time broadcast:
+    * Σ over shards of the shard's occurrences' contributions, one collect,
+    * broadcast and job per shard. */
   def shardedLikelihood(
       docs: Dataset[DocState], modelRows: Dataset[WordTopics],
       numWords: Int, cfg: LdaConfig, numShards: Int = 0,
@@ -456,51 +537,35 @@ object ShardedLda {
       maxShardBytes: Long = 64L << 20): Double = {
     val k = cfg.numTopics
     val (alpha, beta) = (cfg.alpha, cfg.beta)
+    val vBeta = numWords * beta
     val global = globalRowRdd(modelRows, k)
     val sc = docs.sparkContext
-    // honor the caller's shard count (train threads its own, preserving the
-    // "driver bounded by shard size" guarantee); standalone callers get a
-    // byte-budget default: ceil(V*K*8 / maxShardBytes) shards, so one
-    // collectShard never pulls more than maxShardBytes to the driver
+    // an explicit shard count keeps the driver bounded by that shard size;
+    // the default is a byte budget: ceil(V*K*8 / maxShardBytes) shards, so
+    // one collectShard never pulls more than maxShardBytes to the driver
     val shards = effectiveShards(numWords,
       if (numShards >= 1) numShards
       else math.max(1L, (numWords.toLong * k * 8 + maxShardBytes - 1) / maxShardBytes).toInt)
+    val bcGlobal = sc.broadcast(global)
     var total = 0.0
     var s = 0
     while (s < shards) {
       val (lo, hi) = shardBounds(numWords, shards, s)
       val bcShard = sc.broadcast(collectShard(modelRows, lo, hi, k))
-      val bcGlobal = sc.broadcast(global)
       total += docs.mapPartitions { it =>
         val shard = bcShard.value
         val g = bcGlobal.value
         var acc = 0.0
         it.foreach { doc =>
-          val hist = doc.topicHistogram(k)
-          val len = doc.numOccurrences
-          var i = 0
-          while (i < doc.wordIds.length) {
-            val w = doc.wordIds(i)
-            if (w >= lo && w < hi) {
-              val wOff = (w - lo) * k
-              var pw = 0.0
-              var t = 0
-              while (t < k) {
-                pw += (shard(wOff + t) + beta) / (g(t) + numWords * beta) *
-                  ((hist(t) + alpha) / (len + alpha * k))
-                t += 1
-              }
-              acc += (doc.offsets(i + 1) - doc.offsets(i)) * math.log(pw)
-            }
-            i += 1
-          }
+          val pzd = topicProbs(doc.topicHistogram(k), doc.numOccurrences, alpha)
+          acc = shardLogLikelihood(doc, lo, hi, shard, g, beta, vBeta, pzd, acc)
         }
         Iterator.single(acc)
       }.treeReduce(_ + _, depth = 1) // partials are one Double each
       bcShard.unpersist(blocking = false)
-      bcGlobal.unpersist(blocking = false)
       s += 1
     }
+    bcGlobal.unpersist(blocking = false)
     total
   }
 }

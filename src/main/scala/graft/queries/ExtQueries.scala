@@ -5,6 +5,7 @@ import graft.ext.{Blocklist, Dedup, Drift, Experiment, FeaturePrep, Graph, Unigr
 import graft.sources.Formats
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Extension-operator queries (SURVEY §2.4 / north-star LLM-pipeline
   * surface), every one carrying a DuckDB hash oracle. The trick
@@ -1518,15 +1519,21 @@ object ExtQueries {
     * 100 TB deployment) and misses nested partition directories, both
     * of which would silently floor every stateful stream at 8 state
     * partitions. globStatus expands glob metacharacters and
-    * getContentSummary recurses; any failure sizes as 0 (= caller keeps
-    * the session default, never a wrong positive). */
+    * getContentSummary recurses; any non-fatal failure is logged and
+    * sizes as 0 (= caller keeps the session default, never a wrong
+    * positive). */
   private[graft] def sourceBytes(s: SparkSession, p: String): Long =
     try {
       val hp = new org.apache.hadoop.fs.Path(p)
       val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
       Option(fs.globStatus(hp)).getOrElse(Array.empty)
         .map(st => fs.getContentSummary(st.getPath).getLength).sum
-    } catch { case _: Throwable => 0L }
+    } catch {
+      case NonFatal(e) =>
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"sourceBytes($p) failed; sizing it as 0 bytes", e)
+        0L
+    }
 
   private def runStream(df: DataFrame, name: String, mode: String): DataFrame = {
     val s = df.sparkSession

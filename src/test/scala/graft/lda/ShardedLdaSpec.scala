@@ -1,6 +1,11 @@
 package graft.lda
 
 import graft.SparkSpec
+import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.storage.StorageLevel
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 class ShardedLdaSpec extends SparkSpec {
   import spark.implicits._
@@ -161,6 +166,12 @@ class ShardedLdaSpec extends SparkSpec {
     val mass = inferred.collect()
     assert(mass.length == 20)
     mass.foreach(dt => assert(math.abs(dt.topics.sum - 9.0) < 1e-9))
+    // the lineage cut runs on the normalized shard count: the final
+    // state generation is checkpointed, so the view's lineage stops there
+    // instead of spanning every (iteration, shard) pass
+    val state = Iterator.iterate[RDD[_]](inferred.rdd)(_.dependencies.head.rdd)
+      .find(_.getStorageLevel != StorageLevel.NONE).get
+    assert(state.isCheckpointed, state.toDebugString)
     res.release()
   }
 
@@ -209,6 +220,86 @@ class ShardedLdaSpec extends SparkSpec {
     val mb = b.modelRows.collect().map(r => r.wordId -> r.counts.toSeq).toMap
     b.release()
     assert(ma == mb) // parquet round-trip re-pinned by canonicalLayout
+  }
+
+  test("fused likelihood equals the standalone evaluator and leaves the chain unchanged") {
+    val cfg = LdaConfig(k, 0.1, 0.01, totalIterations = 4,
+      computeLikelihood = true, seed = 13L)
+    val full = ShardedLda.train(corpus(20), v, cfg, numShards = 3)
+    assert(full.likelihoods.length == 4)
+    def near(got: Double, ref: Double): Boolean =
+      math.abs(got - ref) <= 1e-9 * math.abs(ref)
+    // likelihoods(n) describes the state after n iterations
+    val init = corpus(20)
+    val ll0 = ShardedLda.shardedLikelihood(init, ShardedLda.countModelRows(init, k), v, cfg)
+    assert(near(full.likelihoods(0), ll0), s"iteration 0: ${full.likelihoods(0)} vs $ll0")
+    (1 to 3).foreach { n =>
+      val part = ShardedLda.train(corpus(20), v, cfg.copy(totalIterations = n), numShards = 3)
+      val ref = ShardedLda.shardedLikelihood(part.docs, part.modelRows, v, cfg)
+      assert(near(full.likelihoods(n), ref), s"iteration $n: ${full.likelihoods(n)} vs $ref")
+      part.release()
+    }
+    val off = ShardedLda.train(corpus(20), v, cfg.copy(computeLikelihood = false), numShards = 3)
+    assert(off.likelihoods.isEmpty)
+    def rows(r: ShardedLda.Result) =
+      r.modelRows.collect().map(w => w.wordId -> w.counts.toSeq).toMap
+    def topics(r: ShardedLda.Result) =
+      r.docs.collect().map(d => d.docId -> d.topics.toSeq).toMap
+    assert(rows(full) == rows(off))
+    assert(topics(full) == topics(off))
+    full.release()
+    off.release()
+  }
+
+  /** Jobs `body` submits from this thread, counted by a listener. Listener
+    * events arrive asynchronously but in order, so seeing a marked job
+    * started after `body` means every job of `body` has been counted. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = "graft.spec.jobs"
+    val counted = new AtomicInteger
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(tag)).orNull match {
+          case "body" => counted.incrementAndGet()
+          case "end" => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "body")
+      body
+      sc.setLocalProperty(tag, "end")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener events never arrived")
+      counted.get
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("sharded training with the likelihood runs 2S+1 jobs per iteration") {
+    val s = 3
+    def jobs(n: Int): Int = {
+      val cfg = LdaConfig(k, 0.1, 0.01, totalIterations = n,
+        computeLikelihood = true, seed = 3L)
+      val ds = corpus(20)
+      var res: ShardedLda.Result = null
+      val j = jobsOf { res = ShardedLda.train(ds, v, cfg, numShards = s) }
+      res.release()
+      j
+    }
+    val (j2, j4) = (jobs(2), jobs(4))
+    // per iteration: S shard collects, S sweep passes (the last one sums
+    // the likelihood) and one recount that also sums the global row; a
+    // separate likelihood pass would add 2S+1 more
+    val perIter = 2 * s + 1
+    assert(j4 - j2 == 2 * perIter, s"2 iterations took ${j4 - j2} jobs")
+    // set-up: the corpus layout's shuffle stage and the first recount
+    assert(j2 <= 2 * perIter + 2, s"2-iteration run took $j2 jobs")
   }
 
   test("sharded training improves likelihood on a planted-topic corpus") {

@@ -460,8 +460,10 @@ class StreamsSpec extends SparkSpec {
         spark, root.toString + "/nope") == 0L)
     } finally {
       def rm(p: java.nio.file.Path): Unit = {
-        if (java.nio.file.Files.isDirectory(p))
-          java.nio.file.Files.list(p).forEach(rm(_))
+        if (java.nio.file.Files.isDirectory(p)) {
+          val children = java.nio.file.Files.list(p)
+          try children.forEach(rm(_)) finally children.close()
+        }
         java.nio.file.Files.deleteIfExists(p)
       }
       rm(root)
